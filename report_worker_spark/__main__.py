@@ -9,6 +9,13 @@
 ``value`` column, the Kafka body shape) and upserts the star schema as
 date-partitioned parquet. ``--stream`` tails the input directory as a
 file stream (swap in sources.kafka.read_report_stream for a broker).
+
+Each micro-batch (epoch), in order: parse the input and materialize it
+once; count the invalid messages from that copy (the DLQ count);
+resolve the v1 names with one get-or-insert against the players dim;
+build the staging rows; run the DLQ append, the dim append and the
+four star-table writes at the same time; commit. The epoch commits
+only after every write has ended, and fails if any of them failed.
 """
 
 from __future__ import annotations
@@ -29,12 +36,12 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     from .sources import kafka as ksrc
     from .streaming.pipeline import (
         StarUpsertSink,
+        concurrent_writes,
         date_partitioned_writer,
         wire_to_staging,
     )
 
     from .streaming.dimstore import ParquetDimStore
-    from .transforms import sanitize_name
 
     spark = _spark("rws-ingest")
     store = ParquetDimStore(spark, f"{args.out}/_dims/players")
@@ -48,26 +55,29 @@ def cmd_ingest(args: argparse.Namespace) -> int:
     sink = StarUpsertSink(writer=writer)
 
     def process(batch, epoch_id):
-        parsed = ksrc.parse_wire(batch)
-        bad = ksrc.invalid_messages(parsed)
-        n_bad = bad.count()
-        if n_bad:
-            ksrc.encode_dlq(bad).write.mode("append").parquet(f"{args.out}/dlq")
-        msgs = ksrc.valid_messages(parsed)
-        # persist first-seen reporter/reported names BEFORE resolving, so
-        # ids are stable across batches and restarts (reference
-        # get-or-insert semantics, MySQL replaced by the parquet store)
-        v1_names = (
-            msgs.filter(F.col("reporter").isNotNull())
-            .select(sanitize_name("reporter").alias("name"))
-            .unionByName(
-                msgs.filter(F.col("reported").isNotNull())
-                .select(sanitize_name("reported").alias("name"))
-            )
-        )
-        store.get_or_insert(v1_names)
-        staging = wire_to_staging(msgs, store.read())
-        sink(staging, epoch_id)
+        # one read of the input: every later job uses this copy
+        parsed = ksrc.parse_wire(batch).persist()
+        try:
+            bad = ksrc.invalid_messages(parsed)
+            n_bad = bad.count()
+            with concurrent_writes() as submit:
+                if n_bad:
+                    submit(
+                        ksrc.encode_dlq(bad).write.mode("append").parquet,
+                        f"{args.out}/dlq",
+                    )
+                # the store resolves the names: get-or-insert keeps ids
+                # stable across batches and restarts (reference
+                # semantics, MySQL replaced by the parquet store). Ids
+                # are pure functions of the name, so the dim append runs
+                # alongside the star writes instead of before them.
+                staging = wire_to_staging(
+                    ksrc.valid_messages(parsed),
+                    lambda names: store.get_or_insert(names, submit),
+                )
+                sink(staging, epoch_id)
+        finally:
+            parsed.unpersist()
         print(f"epoch={epoch_id} invalid={n_bad} status={sink.stats[-1]['status']}")
 
     if args.stream:

@@ -1933,8 +1933,9 @@ def join_interval_overlap(spark: SparkSession, sf: str) -> DataFrame:
     that survives scale: each interval explodes into the hour buckets
     it covers (fan-out = session length in hours, bounded), candidate
     pairs come from an EQUI-join on the bucket, exact overlap filters
-    false positives, and the cross-bucket duplicates collapse with one
-    distinct. No nested-loop join anywhere."""
+    false positives, and each pair is kept only in its first shared
+    bucket, so no cross-bucket duplicates arise and no distinct is
+    needed. No nested-loop join anywhere."""
     e = load(spark, sf, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()

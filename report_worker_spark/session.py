@@ -65,8 +65,14 @@ def get_spark(
         b = b.config(k, v)
     b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     # local[N] runs driver + all executor threads in ONE JVM; size the
-    # heap for that (a cluster deployment would override per-role).
-    b = b.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+    # heap for that (a cluster deployment would override per-role), but
+    # leave half the machine's RAM to the OS and the Python workers — a
+    # heap sized past physical memory gets the JVM OOM-killed.
+    half_ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    b = b.config(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(32 * 1024, half_ram_mb)}m"),
+    )
     b = b.config("spark.ui.enabled", "false")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -16,9 +16,12 @@ halves are tested through ``star.upsert_star`` with parquet sinks.
 
 from __future__ import annotations
 
+from collections import deque
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..streaming.pipeline import STATS_KEEP
 
 
 def read_dim(
@@ -525,7 +528,7 @@ class JdbcStarSink:
         # the fact delta carries the full staging row + FK ids; project
         # to the target table's declared columns before the insert
         self.fact_columns = fact_columns or self.DEFAULT_FACT_COLUMNS
-        self.stats: list[dict] = []
+        self.stats: deque[dict] = deque(maxlen=STATS_KEEP)
 
     def _dim_match_keys(self, id_col: str, natural_keys: list[str]) -> list[str]:
         # hash ids are a pure function of the natural key, so existence

@@ -10,15 +10,20 @@ same id* (idempotent by construction, no coordination, no read-back
 race). The JDBC deployment swaps this for sources.jdbc + the DB's
 unique keys; the interface is identical.
 
-Write protocol per batch: append only the anti-joined misses. A crashed
-batch that retries re-appends the same (name, id) pairs; readers dedup
-on read (cheap: dims are small relative to facts), so duplicate appends
-are harmless — the parquet analog of INSERT IGNORE.
+Write protocol per batch: one left join of the batch's distinct names
+against the dim gives every name's id and marks the misses; it is
+materialized once, and only the misses are appended. A crashed batch
+that retries re-appends the same (name, id) pairs; readers dedup on
+read (cheap: dims are small relative to facts), so duplicate appends
+are harmless — the parquet analog of INSERT IGNORE. And since an id
+is a pure function of its name, the append need not precede the
+writes that carry the ids.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,21 +56,43 @@ class ParquetDimStore:
             .dropDuplicates([self.name_col])
         )
 
-    def get_or_insert(self, batch_names: DataFrame) -> DataFrame:
+    def get_or_insert(
+        self,
+        batch_names: DataFrame,
+        submit: Callable[[Callable[[], None]], None] | None = None,
+    ) -> DataFrame:
         """Resolve every name in ``batch_names`` to a stable id,
         appending first-seen names. Returns (name, id) for the batch's
-        distinct names."""
-        dim = self.read()
-        resolved, new_rows = star.get_or_insert_dim(
-            batch_names, dim, self.name_col, self.id_col, key_mode="hash"
+        distinct names, materialized, so later jobs do not recompute it.
+
+        ``submit(append)`` runs the append; by default it runs before
+        this returns. A micro-batch passes the ``submit`` of its
+        ``pipeline.concurrent_writes`` so the append overlaps its other
+        writes.
+        """
+        name, id_ = self.name_col, self.id_col
+        looked = (
+            star.dedup(batch_names.select(name), [name])
+            .join(
+                self.read().select(name, F.col(id_).alias("_known")),
+                on=name,
+                how="left",
+            )
+            .select(
+                name,
+                F.coalesce("_known", star.surrogate_key([name])).alias(id_),
+                F.col("_known").isNull().alias("_new"),
+            )
+            .localCheckpoint()
         )
-        # persist before the emptiness probe: isEmpty() touches at most
-        # one partition and the append then reuses the cached delta —
-        # previously the anti-join ran twice (probe job + write job)
-        new_rows = new_rows.persist()
-        try:
+        new_rows = looked.filter("_new").select(name, id_)
+
+        def append() -> None:
             if not new_rows.isEmpty():
                 new_rows.write.mode("append").parquet(self.path)
-        finally:
-            new_rows.unpersist()
-        return resolved
+
+        if submit is None:
+            append()
+        else:
+            submit(append)
+        return looked.select(name, id_)

@@ -8,26 +8,81 @@ failure. Spark mapping: ``readStream`` → ``wire_to_staging`` (pure
 column exprs, this module) → ``foreachBatch(StarUpsertSink)`` where the
 trigger interval IS the batcher (A3) and the sink is idempotent
 (anti-join + epoch tracking, ST1).
+
+Per micro-batch the CLI (``__main__``) runs, in order: parse and
+materialize the input once; count the invalid messages and queue their
+DLQ append; resolve the v1 names with one get-or-insert against the
+players dim, queueing the dim append; build the staging rows; write
+the four star tables. The DLQ, dim and star writes depend on each
+other only through data already materialized, so they run at the same
+time (``concurrent_writes``). All of them end before ``foreachBatch``
+returns, so the epoch commits only after every write has ended — the
+epoch is the unit of progress and each write is idempotent or
+replay-tolerant per epoch (*Structured Streaming*, SIGMOD 2018).
 """
 
 from __future__ import annotations
 
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor, wait
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import star, transforms
 from ..schemas import EQUIPMENT_SLOTS
 
+# Per-epoch records a sink keeps: the latest ones, bounded so that a
+# long-running stream holds constant memory.
+STATS_KEEP = 1000
 
-def resolve_v1_names(v1: DataFrame, players: DataFrame) -> DataFrame:
+# The writes of one micro-batch: DLQ, dim, and the four star tables.
+_WRITE_POOL = ThreadPoolExecutor(max_workers=6, thread_name_prefix="epoch-write")
+
+
+@contextmanager
+def concurrent_writes() -> Iterator[Callable[..., None]]:
+    """Run the independent writes of one micro-batch at the same time.
+
+    Yields ``submit(fn, *args)``, which starts ``fn(*args)`` on a pool
+    thread carrying the caller's Spark local properties (the stream's
+    ``streaming.sql.batchId`` and job group among them), so every job
+    is attributed to, and cancelled with, its epoch. On exit every
+    submitted write has ended; a failure — of a write or of the block
+    itself — is raised only after the others have settled.
+    """
+    futures = []
+    session = SparkSession.active()
+
+    def submit(fn: Callable[..., None], *args) -> None:
+        futures.append(
+            _WRITE_POOL.submit(inheritable_thread_target(session)(fn), *args)
+        )
+
+    try:
+        yield submit
+    finally:
+        wait(futures)
+    for f in futures:
+        f.result()
+
+
+def resolve_v1_names(
+    v1: DataFrame, players: DataFrame | Callable[[DataFrame], DataFrame]
+) -> DataFrame:
     """v1 path (J1/J2/F3): sanitize both names, broadcast-join the
     players dim twice (reporter, reported), get-or-insert the misses
     with deterministic ids, null-guard the rest.
 
-    ``players`` must have (name, id); names are pre-sanitized dim-side.
+    ``players`` is either the dim itself — (name, id), names
+    pre-sanitized dim-side; misses get deterministic ids here — or a
+    get-or-insert function (e.g. ``ParquetDimStore.get_or_insert``)
+    that maps the batch's distinct non-null names to one (name, id) row
+    each, so the names are resolved once, by the store.
     """
     # the v1 branch's wire reporter_id/reported_id are null — replace them
     v1 = v1.drop("reporter_id", "reported_id")
@@ -44,13 +99,22 @@ def resolve_v1_names(v1: DataFrame, players: DataFrame) -> DataFrame:
     # explode(array(...)) instead of union-of-two-selects: the union
     # form evaluated the whole upstream (JSON parse included) TWICE —
     # one scan emitting both names halves the parse work per batch.
-    both = v1.select(
-        F.explode(
-            F.array("_reporter_clean", "_reported_clean")
-        ).alias("name")
-    ).distinct()
-    resolved_names, _new = star.get_or_insert_dim(both, players)
-    lookup = resolved_names.dropDuplicates(["name"]).select("name", "id")
+    # Null names never match the resolve joins below; dropping them
+    # keeps them out of a persistent dim.
+    both = (
+        v1.select(
+            F.explode(
+                F.array("_reporter_clean", "_reported_clean")
+            ).alias("name")
+        )
+        .filter(F.col("name").isNotNull())
+        .distinct()
+    )
+    if callable(players):
+        lookup = players(both)
+    else:
+        resolved_names, _new = star.get_or_insert_dim(both, players)
+        lookup = resolved_names.dropDuplicates(["name"]).select("name", "id")
 
     rep = lookup.select(
         F.col("name").alias("_rn1"), F.col("id").alias("reporter_id")
@@ -69,12 +133,16 @@ def resolve_v1_names(v1: DataFrame, players: DataFrame) -> DataFrame:
     return transforms.require_not_null(v1, ["reporter_id", "reported_id"])
 
 
-def wire_to_staging(msgs: DataFrame, players: DataFrame | None = None) -> DataFrame:
+def wire_to_staging(
+    msgs: DataFrame,
+    players: DataFrame | Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
     """Struct-typed wire messages → staging-report rows.
 
     The whole reference transform chain (src/main.py:100-177) as one
     declarative plan: version dispatch, v1 resolve / v2 passthrough,
-    union, ms→s, bounds, clamp, flatten, bool casts.
+    union, ms→s, bounds, clamp, flatten, bool casts. ``players`` is as
+    in :func:`resolve_v1_names`.
     """
     # Pin the parsed messages before fanning out: the v1 branch, the
     # v2 branch, and the v1 name-resolution subtree each re-derive
@@ -139,17 +207,20 @@ class StarUpsertSink:
     """foreachBatch sink: staging batch → star-schema deltas → writer.
 
     ``writer(table_name, delta_df, epoch_id)`` performs the actual
-    append (parquet/Delta/JDBC txn). Idempotency: deltas are anti-joined
+    append (parquet/Delta/JDBC txn); the four table writes run at the
+    same time (``concurrent_writes``) and all end before the call
+    returns. Idempotency: deltas are anti-joined
     against ``current(table_name)`` when provided, and the DB's unique
     keys stay as the at-least-once backstop (ST1). Failures route the
     batch to ``dlq`` instead of poisoning the source topic (ST6).
+    ``stats`` keeps the last ``STATS_KEEP`` per-epoch records.
     """
 
     writer: Callable[[str, DataFrame, int], None]
     current: Callable[[str], DataFrame] | None = None
     dlq: Callable[[DataFrame, int, Exception], None] | None = None
     key_mode: str = "hash"
-    stats: list[dict] = field(default_factory=list)
+    stats: deque[dict] = field(default_factory=lambda: deque(maxlen=STATS_KEEP))
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         try:
@@ -167,8 +238,9 @@ class StarUpsertSink:
                 existing=existing,
                 broadcast_dims=True,
             )
-            for name, df in deltas.items():
-                self.writer(name, df, epoch_id)
+            with concurrent_writes() as submit:
+                for name, df in deltas.items():
+                    submit(self.writer, name, df, epoch_id)
             self.stats.append({"epoch": epoch_id, "status": "ok"})
         except Exception as exc:  # noqa: BLE001 — DLQ semantics need breadth
             if self.dlq is None:

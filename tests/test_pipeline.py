@@ -172,6 +172,85 @@ def test_epoch_writer_replay_idempotent(spark, players, tmp_path):
     assert n3 == 2 * n1
 
 
+def test_failed_write_fails_epoch_after_the_others_end(spark, players, tmp_path):
+    """The star writes of an epoch run concurrently: one that raises
+    fails the epoch only once the other writes have ended, and replaying
+    the epoch then leaves the same tables as one clean run."""
+    import time
+
+    from report_worker_spark.streaming.pipeline import (
+        date_partitioned_writer,
+    )
+
+    batch = wire_to_staging(generate_reports(spark, n=500, seed=17), players)
+    write = date_partitioned_writer(str(tmp_path / "replayed"))
+    ended = []
+
+    def gear_down(name, df, epoch_id):
+        if name == "gear":
+            raise RuntimeError("gear sink down")
+        time.sleep(0.5)  # still running when the gear write raises
+        write(name, df, epoch_id)
+        ended.append(name)
+
+    with pytest.raises(RuntimeError, match="gear sink down"):
+        StarUpsertSink(writer=gear_down)(batch, epoch_id=3)
+    assert sorted(ended) == ["fact", "location", "sighting"]
+
+    StarUpsertSink(writer=write)(batch, epoch_id=3)  # the replay
+    clean = date_partitioned_writer(str(tmp_path / "clean"))
+    StarUpsertSink(writer=clean)(batch, epoch_id=3)
+    for table in ("sighting", "gear", "location", "fact"):
+        got, want = (
+            sorted(map(tuple, spark.read.parquet(str(tmp_path / d / table)).collect()),
+                   key=repr)
+            for d in ("replayed", "clean")
+        )
+        assert got and got == want, table
+
+
+def test_pool_writes_carry_the_epoch_batch_id(spark, players, tmp_path):
+    """Each star write runs on a pool thread that carries its epoch's
+    ``streaming.sql.batchId``, so the jobs it launches are attributed
+    to (and cancelled with) that micro-batch."""
+    import threading
+
+    from report_worker_spark.streaming.pipeline import (
+        date_partitioned_writer,
+    )
+
+    msgs = generate_reports(spark, n=600, seed=19)
+    msgs.repartition(3).write.parquet(str(tmp_path / "src"))
+    write = date_partitioned_writer(str(tmp_path / "out"))
+    seen = []
+
+    def writer(name, df, epoch_id):
+        seen.append((
+            epoch_id,
+            spark.sparkContext.getLocalProperty("streaming.sql.batchId"),
+            threading.current_thread().name,
+        ))
+        write(name, df, epoch_id)
+
+    sink = StarUpsertSink(writer=writer)
+    q = (
+        spark.readStream.schema(msgs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "src"))
+        .writeStream.foreachBatch(
+            lambda batch, epoch_id: sink(wire_to_staging(batch, players), epoch_id)
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_finished(q)
+    assert len(seen) == 4 * 3
+    for epoch_id, batch_id, thread in seen:
+        assert batch_id == str(epoch_id)
+        assert thread.startswith("epoch-write")
+
+
 def test_date_partitioned_fact_prunes(spark, players, tmp_path):
     """Facts land under dt=YYYY-MM-DD partitions; a date-filtered read
     scans only that partition (PartitionFilters in the plan)."""
