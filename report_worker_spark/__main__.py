@@ -6,21 +6,22 @@
     python -m report_worker_spark list-queries
 
 ``ingest`` consumes wire-format messages (parquet files with a JSON
-``value`` column, the Kafka body shape) and upserts the star schema as
-date-partitioned parquet. ``--stream`` tails the input directory as a
-file stream (swap in sources.kafka.read_report_stream for a broker).
-
-Each micro-batch (epoch), in order: parse the input and materialize it
-once; count the invalid messages from that copy (the DLQ count);
-resolve the v1 names with one get-or-insert against the players dim;
-build the staging rows; run the DLQ append, the dim append and the
-four star-table writes at the same time; commit. The epoch commits
-only after every write has ended, and fails if any of them failed.
+``value`` column, the Kafka body shape, or JSONL) and upserts the star
+schema as date-partitioned parquet under ``--out`` through
+``streaming.pipeline.StarUpsertSink``, which also writes the DLQ and
+the players dim. ``--stream`` tails the input directory as a file
+stream (swap in sources.kafka.read_report_stream for a broker), one
+sink call per micro-batch; without it the input is one sink call,
+numbered one past the largest ``epoch=`` partition already under
+``--out`` so that it adds to earlier runs instead of replacing them.
+Each epoch logs one record on the ``report_worker_spark`` logger.
 """
 
 from __future__ import annotations
 
 import argparse
+import logging
+import os
 import sys
 
 
@@ -30,79 +31,41 @@ def _spark(app: str):
     return get_spark(app)
 
 
+def _next_epoch(out: str) -> int:
+    """One more than the largest ``epoch=N`` partition under ``out``
+    (0 when there is none)."""
+    epochs = [
+        int(d[len("epoch="):])
+        for _root, dirs, _files in os.walk(out)
+        for d in dirs
+        if d.startswith("epoch=")
+    ]
+    return max(epochs, default=-1) + 1
+
+
 def cmd_ingest(args: argparse.Namespace) -> int:
-    from pyspark.sql import functions as F
-
-    from .sources import kafka as ksrc
-    from .streaming.pipeline import (
-        StarUpsertSink,
-        concurrent_writes,
-        date_partitioned_writer,
-        wire_to_staging,
-    )
-
-    from .streaming.dimstore import ParquetDimStore
+    from .streaming.pipeline import StarUpsertSink, run_stream_to_star
 
     spark = _spark("rws-ingest")
-    store = ParquetDimStore(spark, f"{args.out}/_dims/players")
+    sink = StarUpsertSink(args.out)
+    store = sink.players(spark)
     if args.players and not store.exists():
         # seed the persistent dim from the provided snapshot
         spark.read.parquet(args.players).select("name", "id").write.mode(
             "append"
         ).parquet(store.path)
 
-    writer = date_partitioned_writer(args.out)
-    sink = StarUpsertSink(writer=writer)
-
-    def process(batch, epoch_id):
-        # one read of the input: every later job uses this copy
-        parsed = ksrc.parse_wire(batch).persist()
-        try:
-            bad = ksrc.invalid_messages(parsed)
-            n_bad = bad.count()
-            with concurrent_writes() as submit:
-                if n_bad:
-                    submit(
-                        ksrc.encode_dlq(bad).write.mode("append").parquet,
-                        f"{args.out}/dlq",
-                    )
-                # the store resolves the names: get-or-insert keeps ids
-                # stable across batches and restarts (reference
-                # semantics, MySQL replaced by the parquet store). Ids
-                # are pure functions of the name, so the dim append runs
-                # alongside the star writes instead of before them.
-                staging = wire_to_staging(
-                    ksrc.valid_messages(parsed),
-                    lambda names: store.get_or_insert(names, submit),
-                )
-                sink(staging, epoch_id)
-        finally:
-            parsed.unpersist()
-        print(f"epoch={epoch_id} invalid={n_bad} status={sink.stats[-1]['status']}")
-
-    if args.stream:
-        raw = (
-            spark.readStream.text(args.input).withColumnRenamed("value", "value")
-            if args.format == "jsonl"
-            else spark.readStream.schema("msg_id long, value string").parquet(
-                args.input
-            )
-        )
-        q = (
-            raw.writeStream.foreachBatch(process)
-            .option("checkpointLocation", args.checkpoint or f"{args.out}/_ckpt")
-            .trigger(processingTime=f"{args.trigger} seconds")
-            .start()
-        )
-        q.awaitTermination()
+    reader = spark.readStream if args.stream else spark.read
+    if args.format == "jsonl":
+        raw = reader.text(args.input)  # one message per line
     else:
-        if args.format == "jsonl":
-            raw = spark.read.text(args.input)  # one message per line
-        else:
-            raw = spark.read.parquet(args.input)
-            if "value" not in raw.columns:
-                raw = raw.select(F.to_json(F.struct(*raw.columns)).alias("value"))
-        process(raw, 0)
+        raw = reader.schema("msg_id long, value string").parquet(args.input)
+    if args.stream:
+        run_stream_to_star(
+            raw, sink, args.checkpoint or f"{args.out}/_ckpt", args.trigger
+        ).awaitTermination()
+    else:
+        sink(raw, _next_epoch(args.out))
     return 0
 
 
@@ -147,6 +110,9 @@ def cmd_explain(args: argparse.Namespace) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    # the per-epoch records at INFO; everything else (py4j) at WARNING
+    logging.basicConfig()
+    logging.getLogger("report_worker_spark").setLevel(logging.INFO)
     p = argparse.ArgumentParser(prog="report_worker_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 

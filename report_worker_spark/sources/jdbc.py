@@ -1,4 +1,4 @@
-"""JDBC dim read / multi-table transactional sink (SURVEY §2 S5-S7).
+"""JDBC dim read / multi-table transactional star writer (SURVEY §2 S5-S7).
 
 The reference's sink is ONE MySQL transaction per micro-batch doing 7
 statements (temp table + DISTINCT + anti-joins + 3-way join + INSERT
@@ -9,19 +9,20 @@ py4j (java.sql.DriverManager) inside ``foreachBatch`` — batch volumes
 are the reference's ~1k rows, so driver-side batched INSERTs are the
 right tool; the relational heavy lifting already happened in Spark.
 
-No database exists in the test environment: everything here is gated
-behind the connection actually being reachable, and the set-algebra
-halves are tested through ``star.upsert_star`` with parquet sinks.
+``jdbc_star_writer`` is the JDBC writer of ``pipeline.StarUpsertSink``:
+the sink parses the batch, writes its DLQ, resolves names through the
+players dim store and computes the star deltas exactly as for parquet,
+then hands the four deltas to one transaction here.
+
+No MySQL server exists in the test environment: the transaction
+mechanics are tested against embedded Derby with the ANSI insert verb.
 """
 
 from __future__ import annotations
 
-from collections import deque
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..streaming.pipeline import STATS_KEEP
 
 
 def read_dim(
@@ -486,89 +487,47 @@ def staged_not_exists_txn(
     return inserted
 
 
-class JdbcStarSink:
-    """The reference's deployment shape end-to-end (S5+S6+J3+ST1): per
-    micro-batch, compute the star deltas in Spark (deterministic hash
-    surrogate keys need no DB round-trip), stage them, and run the
-    NOT-EXISTS insert guard SERVER-SIDE in ONE transaction — commit or
-    rollback together, exactly like the reference's 7-statement MySQL
-    txn (reference report.py:295-311). The database is never read back
-    into Spark: existence checks hit the target tables' own indexes, so
-    per-batch cost is O(batch), not O(warehouse).
+# (table, match keys) of the star schema: hash surrogate ids are a pure
+# function of the natural key, so a dim row's existence is checked on its
+# indexed id alone; the fact on its PK (01_tables.sql:139)
+_STAR_MATCH_KEYS = {
+    "sighting": ["sighting_id"],
+    "gear": ["gear_id"],
+    "location": ["location_id"],
+    "fact": ["sighting_id", "location_id", "region_id"],
+}
+# the reference fact's columns (01_tables.sql:129-140)
+_FACT_COLUMNS = ["sighting_id", "location_id", "gear_id", "region_id"]
 
-    Use as ``writeStream.foreachBatch(JdbcStarSink(url, ...))``. The
-    database's unique keys remain the at-least-once backstop.
-    """
 
-    # the reference fact's columns (01_tables.sql:129-140)
-    DEFAULT_FACT_COLUMNS = [
-        "sighting_id",
-        "location_id",
-        "gear_id",
-        "region_id",
-    ]
+def jdbc_star_writer(
+    url: str,
+    insert_verb: str = "INSERT IGNORE INTO",
+    table_names: dict[str, str] | None = None,
+):
+    """``pipeline.StarUpsertSink`` writer for the reference's deployment
+    shape (S5+S6+J3+ST1): the four star deltas staged and NOT-EXISTS
+    inserted SERVER-SIDE in ONE transaction (``staged_not_exists_txn``)
+    — commit or rollback together, like the reference's 7-statement
+    MySQL txn (reference report.py:295-311). The database is never read
+    back into Spark, so per-batch cost is O(batch), not O(warehouse);
+    its unique keys remain the at-least-once backstop. Returns the
+    per-table inserted-row counts."""
+    tables = table_names or {
+        "sighting": "report_sighting",
+        "gear": "report_gear",
+        "location": "report_location",
+        "fact": "report",
+    }
 
-    def __init__(
-        self,
-        url: str,
-        key_mode: str = "hash",
-        insert_verb: str = "INSERT IGNORE INTO",
-        table_names: dict[str, str] | None = None,
-        fact_columns: list[str] | None = None,
-    ) -> None:
-        self.url = url
-        self.key_mode = key_mode
-        self.insert_verb = insert_verb
-        self.tables = table_names or {
-            "sighting": "report_sighting",
-            "gear": "report_gear",
-            "location": "report_location",
-            "fact": "report",
-        }
-        # the fact delta carries the full staging row + FK ids; project
-        # to the target table's declared columns before the insert
-        self.fact_columns = fact_columns or self.DEFAULT_FACT_COLUMNS
-        self.stats: deque[dict] = deque(maxlen=STATS_KEEP)
-
-    def _dim_match_keys(self, id_col: str, natural_keys: list[str]) -> list[str]:
-        # hash ids are a pure function of the natural key, so existence
-        # can be checked on the indexed surrogate id alone; rank ids are
-        # per-batch, so rank mode matches on the natural key instead
-        return [id_col] if self.key_mode == "hash" else natural_keys
-
-    def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        from .. import star
-        from ..schemas import GEAR_KEYS, LOCATION_KEYS, SIGHTING_KEYS
-
-        spark = batch.sparkSession
-        deltas = star.upsert_star(batch, key_mode=self.key_mode)
-        fact = deltas["fact"].select(*self.fact_columns)
-        inserted = staged_not_exists_txn(
-            spark,
-            self.url,
-            [
-                (
-                    self.tables["sighting"],
-                    deltas["sighting"],
-                    self._dim_match_keys("sighting_id", SIGHTING_KEYS),
-                ),
-                (
-                    self.tables["gear"],
-                    deltas["gear"],
-                    self._dim_match_keys("gear_id", GEAR_KEYS),
-                ),
-                (
-                    self.tables["location"],
-                    deltas["location"],
-                    self._dim_match_keys("location_id", LOCATION_KEYS),
-                ),
-                # fact PK (01_tables.sql:139); INSERT IGNORE's backstop
-                (
-                    self.tables["fact"],
-                    fact,
-                    ["sighting_id", "location_id", "region_id"],
-                ),
-            ],
-            insert_verb=self.insert_verb,
+    def write(deltas: dict[str, DataFrame], epoch_id: int, submit) -> dict[str, int]:
+        # the fact delta carries the full staging row + FK ids
+        deltas = {**deltas, "fact": deltas["fact"].select(*_FACT_COLUMNS)}
+        return staged_not_exists_txn(
+            deltas["fact"].sparkSession,
+            url,
+            [(tables[t], deltas[t], keys) for t, keys in _STAR_MATCH_KEYS.items()],
+            insert_verb=insert_verb,
         )
-        self.stats.append({"epoch": epoch_id, "status": "ok", "inserted": inserted})
+
+    return write

@@ -129,41 +129,34 @@ def resolve_fk(
 def upsert_star(
     batch: DataFrame,
     key_mode: str = "hash",
-    existing: dict[str, DataFrame] | None = None,
     broadcast_dims: bool | None = None,
 ) -> dict[str, DataFrame]:
     """The reference's 7-statement MySQL transaction as set algebra.
 
     ``batch`` is a staging-shaped DataFrame (schemas.STG_REPORT_SCHEMA
     naming). Returns the four deltas to append: sighting / gear /
-    location dims and the FK-resolved fact. ``existing`` maps dim name →
-    current dim contents for the NOT-EXISTS guard (omit for bootstrap).
+    location dims and the FK-resolved fact. The NOT-EXISTS guard against
+    rows already stored belongs to the writer (replace-per-epoch
+    parquet, or the server-side insert-select of the JDBC txn).
+
+    ``batch`` is cached here (it feeds four scans); the caller
+    unpersists it once the deltas are written.
 
     Reference: src/app/controllers/report.py:84-311.
     """
     batch = batch.cache()  # feeds 4 scans, like the MEMORY temp table
 
-    # full per-batch dims: the fact must resolve against ALL the batch's
-    # keys (hash ids are deterministic, so they agree with any existing
+    # per-batch dims: ALL the batch's keys, which the fact resolves
+    # against (hash ids are deterministic, so they agree with any stored
     # copies of the same natural key)
-    sight_full = build_dim(batch, SIGHTING_KEYS, "sighting_id", key_mode)
-    gear_full = build_dim(batch, GEAR_KEYS, "gear_id", key_mode)
-    loc_full = build_dim(batch, LOCATION_KEYS, "location_id", key_mode)
-
-    # deltas to append: NOT-EXISTS guard against the current dim state
-    sight, gear, loc = sight_full, gear_full, loc_full
-    if existing:
-        if "sighting" in existing:
-            sight = anti_join_new(sight_full, existing["sighting"], SIGHTING_KEYS)
-        if "gear" in existing:
-            gear = anti_join_new(gear_full, existing["gear"], GEAR_KEYS)
-        if "location" in existing:
-            loc = anti_join_new(loc_full, existing["location"], LOCATION_KEYS)
+    sight = build_dim(batch, SIGHTING_KEYS, "sighting_id", key_mode)
+    gear = build_dim(batch, GEAR_KEYS, "gear_id", key_mode)
+    loc = build_dim(batch, LOCATION_KEYS, "location_id", key_mode)
 
     fact = batch
     if key_mode == "hash":
         # Hash surrogate ids are pure row-local functions of the natural
-        # key, and the full dims above are DISTINCT projections of this
+        # key, and the dims above are DISTINCT projections of this
         # very batch — so the three null-safe FK-resolve joins are
         # identity lookups: every fact row matches exactly one dim row,
         # and the attached id equals xxhash64 over the fact's own key
@@ -179,19 +172,16 @@ def upsert_star(
             fact = fact.withColumn(id_col, surrogate_key(keys, "hash"))
     else:
         # J4: chained null-safe equi-joins resolving the three surrogate
-        # FKs against the FULL dims (the anti-joined deltas would drop
-        # facts whose keys already exist; reusing the frames avoids
+        # FKs against the per-batch dims (reusing the frames avoids
         # rebuilding each distinct-aggregation a second time).
         fact = resolve_fk(
-            fact, sight_full, SIGHTING_KEYS, "sighting_id",
-            broadcast=broadcast_dims,
+            fact, sight, SIGHTING_KEYS, "sighting_id", broadcast=broadcast_dims
         )
         fact = resolve_fk(
-            fact, gear_full, GEAR_KEYS, "gear_id", broadcast=broadcast_dims
+            fact, gear, GEAR_KEYS, "gear_id", broadcast=broadcast_dims
         )
         fact = resolve_fk(
-            fact, loc_full, LOCATION_KEYS, "location_id",
-            broadcast=broadcast_dims,
+            fact, loc, LOCATION_KEYS, "location_id", broadcast=broadcast_dims
         )
     # fact PK is (sighting_id, location_id, region_id) (01_tables.sql:139);
     # INSERT IGNORE ⇒ keep one row per PK.

@@ -4,25 +4,28 @@ star upsert, identical code in batch and streaming.
 Reference lifecycle (src/main.py): Kafka → parse/validate → version
 dispatch → v1 name→id resolve / v2 passthrough → ts normalize → bounds
 → clamp → flatten → batch(1000 rows/60 s) → one MySQL txn → DLQ on
-failure. Spark mapping: ``readStream`` → ``wire_to_staging`` (pure
-column exprs, this module) → ``foreachBatch(StarUpsertSink)`` where the
-trigger interval IS the batcher (A3) and the sink is idempotent
-(anti-join + epoch tracking, ST1).
+failure. Spark mapping: ``readStream`` → ``foreachBatch(StarUpsertSink)``
+where the trigger interval IS the batcher (A3) and the sink is
+idempotent per epoch (ST1). ``wire_to_staging`` (pure column exprs,
+this module) is the transform chain the sink runs.
 
-Per micro-batch the CLI (``__main__``) runs, in order: parse and
-materialize the input once; count the invalid messages and queue their
-DLQ append; resolve the v1 names with one get-or-insert against the
-players dim, queueing the dim append; build the staging rows; write
-the four star tables. The DLQ, dim and star writes depend on each
-other only through data already materialized, so they run at the same
-time (``concurrent_writes``). All of them end before ``foreachBatch``
-returns, so the epoch commits only after every write has ended — the
-epoch is the unit of progress and each write is idempotent or
-replay-tolerant per epoch (*Structured Streaming*, SIGMOD 2018).
+``StarUpsertSink`` is the one micro-batch (epoch) path, in order: parse
+and materialize the wire batch once; count the invalid messages and
+queue their DLQ write; resolve the v1 names with one get-or-insert
+against the players dim, queueing the dim append; build the staging
+rows; compute the star deltas; hand them to the writer — parquet
+(``parquet_star_writer``) or one JDBC transaction
+(``sources.jdbc.jdbc_star_writer``). The DLQ, dim and star writes
+depend on each other only through data already materialized, so they
+run at the same time (``concurrent_writes``). All of them end before
+the sink returns, so the epoch commits only after every write has
+ended — the epoch is the unit of progress and each write is idempotent
+or replay-tolerant per epoch (*Structured Streaming*, SIGMOD 2018).
 """
 
 from __future__ import annotations
 
+import logging
 from collections import deque
 from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
@@ -35,6 +38,16 @@ from pyspark.sql import functions as F
 
 from .. import star, transforms
 from ..schemas import EQUIPMENT_SLOTS
+from ..sources import kafka as ksrc
+from .dimstore import ParquetDimStore
+
+log = logging.getLogger("report_worker_spark")
+
+# writer(star deltas by table, epoch_id, submit) -> per-table insert
+# counts, or None
+EpochWriter = Callable[
+    [dict[str, DataFrame], int, Callable[..., None]], "dict[str, int] | None"
+]
 
 # Per-epoch records a sink keeps: the latest ones, bounded so that a
 # long-running stream holds constant memory.
@@ -204,53 +217,83 @@ def wire_to_staging(
 
 @dataclass
 class StarUpsertSink:
-    """foreachBatch sink: staging batch → star-schema deltas → writer.
+    """The foreachBatch sink: one micro-batch of wire messages (a
+    ``value`` JSON column) → DLQ, players dim and star tables.
 
-    ``writer(table_name, delta_df, epoch_id)`` performs the actual
-    append (parquet/Delta/JDBC txn); the four table writes run at the
-    same time (``concurrent_writes``) and all end before the call
-    returns. Idempotency: deltas are anti-joined
-    against ``current(table_name)`` when provided, and the DB's unique
-    keys stay as the at-least-once backstop (ST1). Failures route the
-    batch to ``dlq`` instead of poisoning the source topic (ST6).
-    ``stats`` keeps the last ``STATS_KEEP`` per-epoch records.
+    Per epoch, in the order of the module docstring. Invalid messages
+    go to ``{out}/dlq`` and v1 names resolve against the
+    ``ParquetDimStore`` at ``{out}/_dims/players``. ``writer(deltas,
+    epoch_id, submit)`` writes the four star deltas (default:
+    ``parquet_star_writer(out)``); it may start writes with ``submit``
+    and may return per-table insert counts. The parsed batch and
+    ``upsert_star``'s staging cache are released once every write has
+    ended.
+
+    Each epoch's record (epoch, invalid count, status, and the writer's
+    ``inserted`` counts when it returns them) is logged on the
+    ``report_worker_spark`` logger and kept in ``stats`` (the last
+    ``STATS_KEEP``). A failure routes the raw batch to ``dlq`` when one
+    is set instead of failing the epoch (ST6).
     """
 
-    writer: Callable[[str, DataFrame, int], None]
-    current: Callable[[str], DataFrame] | None = None
+    out: str
+    writer: EpochWriter | None = None
     dlq: Callable[[DataFrame, int, Exception], None] | None = None
-    key_mode: str = "hash"
     stats: deque[dict] = field(default_factory=lambda: deque(maxlen=STATS_KEEP))
 
+    def __post_init__(self) -> None:
+        if self.writer is None:
+            self.writer = parquet_star_writer(self.out)
+
+    def players(self, spark: SparkSession) -> ParquetDimStore:
+        """The persistent players dim the v1 names resolve against."""
+        return ParquetDimStore(spark, f"{self.out}/_dims/players")
+
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
+        record = {"epoch": epoch_id, "invalid": None, "status": "ok"}
+        # one read of the input: every later job uses this copy
+        parsed = ksrc.parse_wire(batch).persist()
+        staging = None
         try:
-            existing = None
-            if self.current is not None:
-                existing = {
-                    name: self.current(name)
-                    for name in ("sighting", "gear", "location")
-                }
-            # micro-batches are trigger-bounded (maxOffsetsPerTrigger),
-            # so the per-batch distinct dims are always broadcast-sized
-            deltas = star.upsert_star(
-                batch,
-                key_mode=self.key_mode,
-                existing=existing,
-                broadcast_dims=True,
-            )
+            bad = ksrc.invalid_messages(parsed)
+            record["invalid"] = n_bad = bad.count()
+            store = self.players(batch.sparkSession)
             with concurrent_writes() as submit:
-                for name, df in deltas.items():
-                    submit(self.writer, name, df, epoch_id)
-            self.stats.append({"epoch": epoch_id, "status": "ok"})
+                if n_bad:
+                    submit(
+                        write_epoch, ksrc.encode_dlq(bad), f"{self.out}/dlq",
+                        epoch_id,
+                    )
+                # the store resolves the names: get-or-insert keeps ids
+                # stable across batches and restarts (reference
+                # semantics, MySQL replaced by the parquet store). Ids
+                # are pure functions of the name, so the dim append runs
+                # alongside the star writes instead of before them.
+                staging = wire_to_staging(
+                    ksrc.valid_messages(parsed),
+                    lambda names: store.get_or_insert(names, submit),
+                )
+                # micro-batches are trigger-bounded (maxOffsetsPerTrigger),
+                # so the per-batch distinct dims are always broadcast-sized
+                deltas = star.upsert_star(staging, broadcast_dims=True)
+                inserted = self.writer(deltas, epoch_id, submit)
+            if inserted is not None:
+                record["inserted"] = inserted
         except Exception as exc:  # noqa: BLE001 — DLQ semantics need breadth
             if self.dlq is None:
                 raise
             self.dlq(batch, epoch_id, exc)
-            self.stats.append({"epoch": epoch_id, "status": "dlq"})
+            record["status"] = "dlq"
+        finally:
+            if staging is not None:
+                staging.unpersist()  # upsert_star cached it
+            parsed.unpersist()
+        self.stats.append(record)
+        log.info("%s", record)
 
 
 def run_stream_to_star(
-    stream_staging: DataFrame,
+    stream: DataFrame,
     sink: StarUpsertSink,
     checkpoint: str,
     trigger_seconds: int = 60,
@@ -259,50 +302,56 @@ def run_stream_to_star(
     latency (A3, src/main.py:42,54); checkpoint = consumer-group offset
     tracking (ST1)."""
     return (
-        stream_staging.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
     )
 
 
-def epoch_partitioned_writer(base_path: str):
-    """Replay-safe parquet writer for StarUpsertSink: each epoch writes
-    its own ``epoch=N`` partition with overwrite, so a crashed-and-
-    replayed micro-batch replaces its partial output instead of
-    appending duplicates (ST1 — the parquet analog of the reference's
-    INSERT IGNORE idempotency backstop)."""
+def write_epoch(
+    df: DataFrame, path: str, epoch_id: int, by: tuple[str, ...] = ()
+) -> None:
+    """Write ``df`` as the ``epoch=N`` partition of ``path`` (under the
+    ``by`` partitions) with dynamic overwrite, so a crashed-and-replayed
+    micro-batch replaces its partial output instead of appending
+    duplicates (ST1 — the parquet analog of the reference's INSERT
+    IGNORE idempotency backstop)."""
+    (
+        df.withColumn("epoch", F.lit(epoch_id))
+        .write.mode("overwrite")
+        .partitionBy(*by, "epoch")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
+
+
+def date_partitioned_writer(base_path: str, ts_col: str = "timestamp"):
+    """Per-table star writer: partition by event date AND epoch with
+    dynamic overwrite — readers prune on ``dt`` (partition pruning is
+    the first-order win at 100 TB: a day's query touches a day's
+    files), replays overwrite only their own (dt, epoch) leaves. Tables
+    without ``ts_col`` (the dims) are partitioned by epoch alone."""
 
     def write(name: str, df: DataFrame, epoch_id: int) -> None:
-        (
-            df.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .partitionBy("epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(f"{base_path}/{name}")
-        )
+        by = ()
+        if ts_col in df.columns:
+            df = df.withColumn("dt", F.to_date(F.col(ts_col)))
+            by = ("dt",)
+        write_epoch(df, f"{base_path}/{name}", epoch_id, by)
 
     return write
 
 
-def date_partitioned_writer(base_path: str, ts_col: str = "timestamp"):
-    """Scale-path fact writer: partition by event date AND epoch with
-    dynamic overwrite — readers prune on ``dt`` (partition pruning is
-    the first-order win at 100 TB: a day's query touches a day's
-    files), replays overwrite only their own (dt, epoch) leaves."""
+def parquet_star_writer(base_path: str):
+    """``StarUpsertSink`` writer: the four star tables under
+    ``base_path``, each through a ``date_partitioned_writer`` closure,
+    all at once on the epoch's write pool."""
 
-    def write(name: str, df: DataFrame, epoch_id: int) -> None:
-        cols = ["epoch"]
-        if ts_col in df.columns:
-            df = df.withColumn("dt", F.to_date(F.col(ts_col)))
-            cols = ["dt", "epoch"]
-        (
-            df.withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .partitionBy(*cols)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(f"{base_path}/{name}")
-        )
+    def write(deltas: dict[str, DataFrame], epoch_id: int, submit) -> None:
+        table = date_partitioned_writer(base_path)
+        for name, df in deltas.items():
+            submit(table, name, df, epoch_id)
 
     return write
 
@@ -332,16 +381,3 @@ def staging_to_wire(staging: DataFrame) -> DataFrame:
         ),
         F.coalesce(F.col("equip_ge_value"), F.lit(0)).alias("equip_ge_value"),
     )
-
-
-def stop_all_streams(spark, timeout_seconds: int = 30) -> list[str]:
-    """ST7 graceful shutdown (reference src/gracefull_shutdown.py:8-21
-    defines one and never wires it in; ours is used): stop every active
-    query and wait for termination. Returns the stopped query names."""
-    stopped = []
-    for q in spark.streams.active:
-        name = q.name or q.id
-        q.stop()
-        q.awaitTermination(timeout_seconds)
-        stopped.append(str(name))
-    return stopped

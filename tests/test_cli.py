@@ -41,9 +41,18 @@ def test_cli_ingest_batch_and_list(spark, tmp_path, capsys):
     assert main(["query", "nope_not_real"]) == 2
 
 
+def _rows(spark, path):
+    """A star table's rows as a sorted list, without the epoch column
+    (the run that wrote them)."""
+    df = spark.read.parquet(path).drop("epoch")
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()), key=repr)
+
+
 def test_cli_ingest_ids_stable_across_runs(spark, tmp_path):
     """Two separate ingest invocations over different batches must
-    resolve the same player name to the same id (dim store persists)."""
+    resolve the same player name to the same id (dim store persists),
+    and the second adds to the first's star tables: its fact and
+    sighting rows equal the union of each run's rows alone."""
     generate_report_json(spark, n=400, seed=21).write.parquet(
         str(tmp_path / "w1")
     )
@@ -65,6 +74,17 @@ def test_cli_ingest_ids_stable_across_runs(spark, tmp_path):
     for name, i in dim1.items():
         assert dim2[name] == i  # stable
     assert len(dim2) >= len(dim1)
+
+    for w in ("w1", "w2"):
+        alone = str(tmp_path / f"alone_{w}")
+        assert main(["ingest", "--input", str(tmp_path / w), "--out", alone]) == 0
+    for table in ("fact", "sighting"):
+        union = sorted(
+            _rows(spark, str(tmp_path / f"alone_w1/{table}"))
+            + _rows(spark, str(tmp_path / f"alone_w2/{table}")),
+            key=repr,
+        )
+        assert _rows(spark, f"{out}/{table}") == union, table
 
 
 def test_cli_ingest_jsonl(spark, tmp_path):

@@ -19,6 +19,7 @@ from report_worker_spark.sources.synthetic import (
 )
 from report_worker_spark.streaming.pipeline import (
     StarUpsertSink,
+    date_partitioned_writer,
     wire_to_staging,
 )
 from tests.conftest import await_finished
@@ -33,6 +34,32 @@ def players(spark):
     return spark.range(300).select(
         F.concat(F.lit("player"), F.col("id")).alias("name"),
         F.col("id").alias("id"),
+    )
+
+
+def _sink(players, out, **kwargs) -> StarUpsertSink:
+    """A sink writing under ``out``, its players dim seeded with
+    ``players``."""
+    sink = StarUpsertSink(str(out), **kwargs)
+    players.write.parquet(f"{out}/_dims/players")
+    return sink
+
+
+def _pooled(table_writer):
+    """A sink writer running ``table_writer(name, df, epoch_id)`` per
+    star table on the epoch's write pool."""
+
+    def write(deltas, epoch_id, submit):
+        for name, df in deltas.items():
+            submit(table_writer, name, df, epoch_id)
+
+    return write
+
+
+def _with_one_malformed(spark, n, seed):
+    """``n`` generated wire messages plus one that is not JSON."""
+    return generate_report_json(spark, n=n, seed=seed).select("value").union(
+        spark.createDataFrame([("{not json",)], "value string")
     )
 
 
@@ -89,12 +116,12 @@ def test_invalid_json_routed_not_dropped(spark):
 
 
 def test_streaming_file_source_to_star(spark, players, tmp_path):
-    """Drive the same transforms through Structured Streaming with a
-    file source and a parquet-writing StarUpsertSink."""
+    """Drive the sink through Structured Streaming with a file source of
+    wire messages, writing parquet star tables."""
     src = tmp_path / "src"
     out = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
-    msgs = generate_reports(spark, n=1000, seed=7)
+    msgs = generate_report_json(spark, n=1000, seed=7)
     msgs.write.parquet(str(src))
 
     stream = spark.readStream.schema(msgs.schema).parquet(str(src))
@@ -102,16 +129,10 @@ def test_streaming_file_source_to_star(spark, players, tmp_path):
     def writer(name, df, epoch_id):
         df.write.mode("append").parquet(f"{out}/{name}")
 
-    sink = StarUpsertSink(writer=writer)
-
-    # v1 name resolution derives dim rows from the batch itself, so it
-    # runs INSIDE foreachBatch (like the reference's per-batch txn) —
-    # on the raw stream it would be an unsupported stream-stream join.
-    def process(batch, epoch_id):
-        sink(wire_to_staging(batch, players), epoch_id)
+    sink = _sink(players, out, writer=_pooled(writer))
 
     q = (
-        stream.writeStream.foreachBatch(process)
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(ckpt))
         .trigger(availableNow=True)
         .start()
@@ -132,19 +153,18 @@ def test_streaming_file_source_to_star(spark, players, tmp_path):
     assert sink.stats and all(s["status"] == "ok" for s in sink.stats)
 
 
-def test_sink_dlq_on_failure(spark, players):
-    msgs = generate_reports(spark, n=200, seed=9)
-    batch = wire_to_staging(msgs, players)
+def test_sink_dlq_on_failure(spark, players, tmp_path):
+    batch = generate_report_json(spark, n=200, seed=9)
     captured = {}
 
-    def writer(name, df, epoch_id):
+    def writer(deltas, epoch_id, submit):
         raise RuntimeError("sink down")
 
     def dlq(df, epoch_id, exc):
         captured["rows"] = df.count()
         captured["exc"] = str(exc)
 
-    sink = StarUpsertSink(writer=writer, dlq=dlq)
+    sink = _sink(players, tmp_path / "out", writer=writer, dlq=dlq)
     sink(batch, epoch_id=1)
     assert captured["rows"] > 0
     assert "sink down" in captured["exc"]
@@ -154,14 +174,8 @@ def test_sink_dlq_on_failure(spark, players):
 def test_epoch_writer_replay_idempotent(spark, players, tmp_path):
     """A re-run of the same epoch (foreachBatch replay after crash)
     must replace, not duplicate, that epoch's output."""
-    from report_worker_spark.streaming.pipeline import (
-        epoch_partitioned_writer,
-    )
-
-    msgs = generate_reports(spark, n=500, seed=11)
-    batch = wire_to_staging(msgs, players)
-    writer = epoch_partitioned_writer(str(tmp_path / "star"))
-    sink = StarUpsertSink(writer=writer)
+    batch = generate_report_json(spark, n=500, seed=11)
+    sink = _sink(players, tmp_path / "star")
     sink(batch, epoch_id=7)
     n1 = spark.read.parquet(str(tmp_path / "star/fact")).count()
     sink(batch, epoch_id=7)  # replay
@@ -172,17 +186,52 @@ def test_epoch_writer_replay_idempotent(spark, players, tmp_path):
     assert n3 == 2 * n1
 
 
+def test_dlq_replay_keeps_one_row_per_message(spark, players, tmp_path):
+    """The DLQ is written per epoch with overwrite: replaying an epoch
+    that held one malformed message leaves one DLQ row, not two."""
+    batch = _with_one_malformed(spark, n=50, seed=12)
+    sink = _sink(players, tmp_path / "out")
+    sink(batch, epoch_id=4)
+    sink(batch, epoch_id=4)  # the replay
+    dlq = spark.read.parquet(str(tmp_path / "out/dlq"))
+    assert dlq.count() == 1
+    assert [r.epoch for r in dlq.collect()] == [4]
+    assert [s["invalid"] for s in sink.stats] == [1, 1]
+
+
+def test_sink_releases_its_caches(spark, players, tmp_path):
+    """After each epoch the session holds as many cached DataFrames as
+    before it: the parsed batch and the staging rows ``upsert_star``
+    caches are released once the writes have ended."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    batch = generate_report_json(spark, n=300, seed=14)
+    sink = _sink(players, tmp_path / "out")
+    for epoch_id in range(2):
+        before = cache.numCachedEntries()
+        sink(batch, epoch_id)
+        assert cache.numCachedEntries() == before
+
+
+def test_sink_logs_one_record_per_epoch(spark, players, tmp_path, caplog):
+    """Each epoch's record goes to the ``report_worker_spark`` logger:
+    the same dict the sink keeps in ``stats``."""
+    import logging
+
+    batch = _with_one_malformed(spark, n=100, seed=15)
+    sink = _sink(players, tmp_path / "out")
+    with caplog.at_level(logging.INFO, logger="report_worker_spark"):
+        sink(batch, epoch_id=2)
+    (rec,) = [r for r in caplog.records if r.name == "report_worker_spark"]
+    assert rec.args == sink.stats[-1] == {"epoch": 2, "invalid": 1, "status": "ok"}
+
+
 def test_failed_write_fails_epoch_after_the_others_end(spark, players, tmp_path):
     """The star writes of an epoch run concurrently: one that raises
     fails the epoch only once the other writes have ended, and replaying
     the epoch then leaves the same tables as one clean run."""
     import time
 
-    from report_worker_spark.streaming.pipeline import (
-        date_partitioned_writer,
-    )
-
-    batch = wire_to_staging(generate_reports(spark, n=500, seed=17), players)
+    batch = generate_report_json(spark, n=500, seed=17)
     write = date_partitioned_writer(str(tmp_path / "replayed"))
     ended = []
 
@@ -194,12 +243,13 @@ def test_failed_write_fails_epoch_after_the_others_end(spark, players, tmp_path)
         ended.append(name)
 
     with pytest.raises(RuntimeError, match="gear sink down"):
-        StarUpsertSink(writer=gear_down)(batch, epoch_id=3)
+        _sink(players, tmp_path / "replayed", writer=_pooled(gear_down))(
+            batch, epoch_id=3
+        )
     assert sorted(ended) == ["fact", "location", "sighting"]
 
-    StarUpsertSink(writer=write)(batch, epoch_id=3)  # the replay
-    clean = date_partitioned_writer(str(tmp_path / "clean"))
-    StarUpsertSink(writer=clean)(batch, epoch_id=3)
+    StarUpsertSink(str(tmp_path / "replayed"))(batch, epoch_id=3)  # the replay
+    _sink(players, tmp_path / "clean")(batch, epoch_id=3)
     for table in ("sighting", "gear", "location", "fact"):
         got, want = (
             sorted(map(tuple, spark.read.parquet(str(tmp_path / d / table)).collect()),
@@ -215,11 +265,7 @@ def test_pool_writes_carry_the_epoch_batch_id(spark, players, tmp_path):
     to (and cancelled with) that micro-batch."""
     import threading
 
-    from report_worker_spark.streaming.pipeline import (
-        date_partitioned_writer,
-    )
-
-    msgs = generate_reports(spark, n=600, seed=19)
+    msgs = generate_report_json(spark, n=600, seed=19)
     msgs.repartition(3).write.parquet(str(tmp_path / "src"))
     write = date_partitioned_writer(str(tmp_path / "out"))
     seen = []
@@ -232,14 +278,12 @@ def test_pool_writes_carry_the_epoch_batch_id(spark, players, tmp_path):
         ))
         write(name, df, epoch_id)
 
-    sink = StarUpsertSink(writer=writer)
+    sink = _sink(players, tmp_path / "out", writer=_pooled(writer))
     q = (
         spark.readStream.schema(msgs.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "src"))
-        .writeStream.foreachBatch(
-            lambda batch, epoch_id: sink(wire_to_staging(batch, players), epoch_id)
-        )
+        .writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -254,15 +298,8 @@ def test_pool_writes_carry_the_epoch_batch_id(spark, players, tmp_path):
 def test_date_partitioned_fact_prunes(spark, players, tmp_path):
     """Facts land under dt=YYYY-MM-DD partitions; a date-filtered read
     scans only that partition (PartitionFilters in the plan)."""
-    from report_worker_spark.streaming.pipeline import (
-        date_partitioned_writer,
-    )
-
-    msgs = generate_reports(spark, n=2000, seed=13)
-    batch = wire_to_staging(msgs, players)
-    writer = date_partitioned_writer(str(tmp_path / "star"))
-    sink = StarUpsertSink(writer=writer)
-    sink(batch, epoch_id=0)
+    batch = generate_report_json(spark, n=2000, seed=13)
+    _sink(players, tmp_path / "star")(batch, epoch_id=0)
 
     fact = spark.read.parquet(str(tmp_path / "star/fact"))
     assert "dt" in fact.columns
@@ -322,25 +359,6 @@ def test_sql_api_same_results(spark, sf_oracle):
     a = sorted(map(tuple, df_api.collect()))
     b = sorted(map(tuple, via_sql.collect()))
     assert a == b
-
-
-def test_graceful_shutdown(spark, players, tmp_path):
-    from report_worker_spark.streaming.pipeline import stop_all_streams
-
-    msgs = generate_reports(spark, n=200, seed=3)
-    src = str(tmp_path / "gs_src")
-    msgs.write.parquet(src)
-    stream = spark.readStream.schema(msgs.schema).parquet(src)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("gs_q")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    assert len(spark.streams.active) >= 1
-    stopped = stop_all_streams(spark)
-    assert "gs_q" in stopped or stopped
-    assert len(spark.streams.active) == 0
 
 
 def test_forward_compatible_unknown_fields(spark, players):

@@ -14,7 +14,6 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from report_worker_spark.sources import kafka as ksrc
 from report_worker_spark.sources.pysource import register
 from report_worker_spark.streaming import pipeline as pl
 from report_worker_spark.streaming.stateful import ProgressRecorder
@@ -37,6 +36,16 @@ def players(spark):
     )
 
 
+def _sink(players, out: str) -> pl.StarUpsertSink:
+    """A parquet sink under ``out``, its players dim seeded (once) with
+    ``players``."""
+    sink = pl.StarUpsertSink(out)
+    store = sink.players(players.sparkSession)
+    if not store.exists():
+        players.write.parquet(store.path)
+    return sink
+
+
 def test_soak_20_batches_with_restart_zero_dup_fact_pks(
     spark, players, tmp_path
 ):
@@ -44,22 +53,14 @@ def test_soak_20_batches_with_restart_zero_dup_fact_pks(
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     recorder = ProgressRecorder()
-    writer = pl.epoch_partitioned_writer(out)
-    sink = pl.StarUpsertSink(writer=writer)
-
-    def process(batch, epoch_id):
-        staged = pl.wire_to_staging(
-            ksrc.valid_messages(ksrc.parse_wire(batch.select("value"))),
-            players,
-        )
-        sink(staged, epoch_id)
+    sink = _sink(players, out)
 
     def run_until(total_epochs: int, budget_s: int = 240) -> None:
         q = (
             spark.readStream.format("wiregen")
             .option("rows_per_batch", ROWS_PER_BATCH)
             .load()
-            .writeStream.foreachBatch(process)
+            .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(processingTime="0 seconds")
             .start()
@@ -154,25 +155,10 @@ def test_kill_and_resume_equals_one_shot(spark, players, tmp_path):
     max_rows, rpb = 3000, 200
 
     def run(out: str, ckpt: str, stop_after_epochs: int | None) -> int:
-        sink = pl.StarUpsertSink(writer=pl.epoch_partitioned_writer(out))
-
-        def staged_sink(batch, epoch_id):
-            # the v1 name resolve joins/unions against the players dim,
-            # so staging runs INSIDE the micro-batch (the reference's
-            # consume → transform → txn batch loop)
-            sink(
-                pl.wire_to_staging(
-                    ksrc.valid_messages(
-                        ksrc.parse_wire(batch.select("value"))
-                    ),
-                    players,
-                ),
-                epoch_id,
-            )
-
+        sink = _sink(players, out)
         q = pl.run_stream_to_star(
             _wire_stream(spark, max_rows, rpb),
-            staged_sink,
+            sink,
             ckpt,
             trigger_seconds=0,
         )
